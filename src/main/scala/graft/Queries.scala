@@ -2188,13 +2188,10 @@ object Queries {
       t(spark, dir, "documents"), "doc_id", "text", 0.8, dir)
     val comp = Components.connectedComponents(pairs, "a_id", "b_id")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-    val out = comp
+    comp
       .select(col("id").as("doc_id"), col("comp").as("component"))
       .withColumn("n_members", count(lit(1)).over(w))
       .orderBy(col("doc_id"))
-    out.cache().count()
-    comp.unpersist()
-    out
   }
 
   /** Same clustering through the O(log n)-round alternating large-star /
@@ -2206,11 +2203,13 @@ object Queries {
       t(spark, dir, "documents"), "doc_id", "text", 0.8, dir)
     val comp = Components.connectedComponentsStar(pairs, "a_id", "b_id")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
+    // checkpointed, not cached: its blocks go with the returned frame,
+    // where a cache() entry would outlive every call in the session
     val out = comp
       .select(col("id").as("doc_id"), col("comp").as("component"))
       .withColumn("n_members", count(lit(1)).over(w))
       .orderBy(col("doc_id"))
-    out.cache().count()
+      .localCheckpoint(true)
     comp.unpersist()
     out
   }
@@ -7163,42 +7162,14 @@ object Queries {
   /** N14k — multi-source BFS over the near-dup graph: hop distance from
     * the seed set (doc_id ≡ 0 mod 10) to every reachable vertex, capped
     * at depth 4 — "how far is each duplicate from an audited exemplar".
-    * Pregel-shaped frontier iteration: each round is ONE edge equi-join
-    * of the CURRENT FRONTIER (not the full vertex set) + one anti-join
-    * against settled vertices + distinct — all frontier-sized, never
-    * corpus-sized, and `localCheckpoint` truncates the growing lineage
-    * each round (the [[ops.Components]] discipline; on a cluster,
-    * `checkpoint()` to the cluster FS). Rounds stop early when a
-    * frontier empties. The DuckDB oracle is the same walk as a recursive
-    * CTE with min-distance fold, so the traversal itself is
-    * hash-checked. */
+    * The frontier walk is [[ops.Bfs]]. The DuckDB oracle is the same
+    * walk as a recursive CTE with min-distance fold, so the traversal
+    * itself is hash-checked. */
   def graphBfs(spark: SparkSession, dir: String): DataFrame = {
     val pairs = text.NearDup.minhashDupPairsCached(
       t(spark, dir, "documents"), "doc_id", "text", 0.8, dir)
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var dist = edges.select(col("src").as("id")).distinct()
-        .filter(col("id") % 10 === 0)
-        .select(col("id"), lit(0L).as("dist"))
-        // lazy: round 1's isEmpty/union materializes it in the same job
-        .localCheckpoint(false)
-      var frontier = dist
-      var d = 1L
-      var done = false
-      while (d <= 4 && !done) {
-        val next = frontier.join(edges, col("id") === col("src"))
-          .select(col("dst").as("id")).distinct()
-          .join(dist, Seq("id"), "left_anti")
-          .select(col("id"), lit(d).as("dist"))
-          .localCheckpoint(true)
-        if (next.isEmpty) done = true
-        else { dist = dist.union(next).localCheckpoint(false)
-               frontier = next; d += 1 }
-      }
-      dist.select(col("id").as("doc_id"), col("dist")).orderBy(col("doc_id"))
-    } finally { edges.unpersist(); () }
+    Bfs.hopDistances(pairs, "a_id", "b_id", maxDepth = 4)
+      .select(col("id").as("doc_id"), col("dist")).orderBy(col("doc_id"))
   }
 
   /** X71 — Mann-Whitney U (one-vs-rest per event type): the rank-based

@@ -120,16 +120,25 @@ object Funnel {
              AND e.ts > acc.first_activation_date
          WHERE acc.first_activation_flag
          GROUP BY acc.account_id, acc.customer_id, acc.first_activation_date;"""
+    alongside(SinkDdl.runSqlScript(spark, customersScript, Map("p" -> prefix))) {
+      SinkDdl.runSqlScript(spark, chainScript, Map("p" -> prefix))
+    }
+    Seq(s"${prefix}_customers", s"${prefix}_invitations",
+      s"${prefix}_applications", s"${prefix}_accounts", s"${prefix}_card")
+  }
+
+  /** Runs `side` on another thread while `main` runs on this one, and
+    * returns once both have finished. If `main` throws, `side` is still
+    * awaited before the exception propagates, so it never keeps writing
+    * while the caller unwinds. */
+  private[graft] def alongside[A](side: => Unit)(main: => A): A = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val customersF = Future {
-      SinkDdl.runSqlScript(spark, customersScript, Map("p" -> prefix))
-    }
-    SinkDdl.runSqlScript(spark, chainScript, Map("p" -> prefix))
-    Await.result(customersF, Duration.Inf)
-    Seq(s"${prefix}_customers", s"${prefix}_invitations",
-      s"${prefix}_applications", s"${prefix}_accounts", s"${prefix}_card")
+    val sideF = Future(side)
+    val out = try main finally Await.ready(sideF, Duration.Inf)
+    Await.result(sideF, Duration.Inf) // rethrows a failure of `side`
+    out
   }
 
   /** The flagship end-to-end funnel query (SURVEY.md §7.2): scan → time

@@ -27,15 +27,18 @@ import org.apache.spark.sql.functions._
   *     guaranteed to reach a fixpoint, so "run R rounds" IS the operator's
   *     definition, the same contract as [[PageRank]]'s fixed iterations.
   *
-  * Scale shape: each round is one equi-join of the edge list against the
-  * vertex-sized label table plus one (vertex, label)-keyed count and one
-  * per-vertex argmax — Spark 4 plans the row_number(1) as WindowGroupLimit,
-  * capping per-partition before the exchange. State between rounds is one
-  * narrow (node, lab) row per vertex of the PAIR graph (duplicates only,
-  * far smaller than the corpus); `localCheckpoint` truncates the iterative
-  * lineage exactly as [[Components.connectedComponents]] does. At 100 TB
-  * the rounds are R more passes over the edge list — linear, keyed, no
-  * all-pairs anywhere.
+  * Scale shape: a pair graph that fits one broadcast (at most
+  * `spark.sql.autoBroadcastJoinThreshold` / 16 pairs, see [[LocalGraph]])
+  * runs the same R rounds over arrays on the driver and returns a local
+  * frame. Above the threshold, or with the threshold at -1, each round is
+  * one equi-join of the edge list against the vertex-sized label table
+  * plus one (vertex, label)-keyed count and one per-vertex argmax — Spark
+  * 4 plans the row_number(1) as WindowGroupLimit, capping per-partition
+  * before the exchange. State between rounds is one narrow (node, lab)
+  * row per vertex of the PAIR graph (duplicates only, far smaller than
+  * the corpus); `localCheckpoint` truncates the iterative lineage exactly
+  * as [[Components.connectedComponents]] does. At 100 TB the rounds are R
+  * more passes over the edge list — linear, keyed, no all-pairs anywhere.
   */
 object LabelProp {
 
@@ -44,6 +47,30 @@ object LabelProp {
   def communities(pairs: DataFrame, aCol: String, bCol: String,
                   rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+    LocalGraph.ifSmall(pairs, aCol, bCol) match {
+      case Some(g) =>
+        g.frame(pairs.sparkSession, "node", "lab", localLabels(g, rounds))
+      case None => distributedLabels(pairs, aCol, bCol, rounds)
+    }
+  }
+
+  /** The distributed rounds over the driver-side graph: every vertex votes
+    * its neighbours' labels (with the pair multiplicity) plus its own
+    * once, and takes the most frequent, ties to the smallest. */
+  private def localLabels(g: LocalGraph, rounds: Int): Array[Long] = {
+    var labels = g.ids
+    for (_ <- 1 to rounds) {
+      val cur = labels
+      labels = Array.tabulate(g.size) { v =>
+        (g.adj(v).map(cur) :+ cur(v)).groupMapReduce(identity)(_ => 1)(_ + _)
+          .minBy { case (lab, c) => (-c, lab) }._1
+      }
+    }
+    labels
+  }
+
+  private def distributedLabels(pairs: DataFrame, aCol: String, bCol: String,
+                                rounds: Int): DataFrame = {
     // The adjacency is materialized hash-partitioned on the join key
     // (nbr) ONCE; each round's vote join then moves only the
     // vertex-sized label table (whose own exit partitioning — the argmax

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Access to the engine's lake tables: one parquet per table under a
   * scale-factor directory (see TESTDATA.md). Mirrors the reference's
@@ -33,7 +34,8 @@ object Tables {
     // available in this session (idempotent).
     graft.functions.GraftFunctions.register(spark)
     pinSession(spark)
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") {
       // the lake has shipped events.ts both as TIMESTAMP(NANOS) (lands as
       // raw Long under the legacy conf) and as plain µs timestamps (lands
@@ -50,6 +52,25 @@ object Tables {
         case _ => df
       }
     } else df
+  }
+
+  private val schemaCaches = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      scala.collection.concurrent.TrieMap[String, StructType]]())
+
+  /** The parquet schema of `path`, inferred once per session and file
+    * version (modification time and length): inference reads footers in
+    * a Spark job, which every lake query would otherwise pay on each call.
+    * Only the schema is shared, never a DataFrame — two reads of one
+    * Dataset would give a self-join the same attribute ids on both sides. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    schemaCaches.computeIfAbsent(spark,
+        _ => scala.collection.concurrent.TrieMap.empty[String, StructType])
+      .getOrElseUpdate(s"$path|${st.getModificationTime}|${st.getLen}",
+        spark.read.parquet(path).schema)
   }
 
   private val countCaches = java.util.Collections.synchronizedMap(

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke over the real sf0.001 testdata: entry + every declared query
   * returns a sane frame, and the streaming twins equal their batch
-  * counterparts. */
+  * counterparts. Also session hygiene: repeated calls leave no cache
+  * behind, and a failed gold build leaves no CTAS running. */
 class EndToEndSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
@@ -87,6 +88,52 @@ class EndToEndSpec extends AnyFunSuite {
         Seq("invitation_id"), "left_anti").count()
       assert(orphans == 0)
     } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("dedup_components_cold leaves no cache entry or persisted RDD " +
+    "behind across calls on the distributed path") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val sc = spark.sparkContext
+    def cachedPlans: Int = {
+      val cm = spark.sharedState.cacheManager
+      val f = cm.getClass.getDeclaredField("cachedData")
+      f.setAccessible(true)
+      f.get(cm).asInstanceOf[scala.collection.Seq[_]].size
+    }
+    // checkpointed blocks are weakly held: they leave the inventory once
+    // their frame is collected, which a cache() entry never does
+    def persistedAfterGc(atMost: Int): Int = {
+      var n = 0
+      var tries = 0
+      do {
+        System.gc(); Thread.sleep(100)
+        n = sc.getPersistentRDDs.size; tries += 1
+      } while (n > atMost && tries < 20)
+      n
+    }
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      Queries.dedupComponentsCold(spark, sf).collect()
+      val plans = cachedPlans
+      val rdds = persistedAfterGc(Int.MaxValue)
+      Queries.dedupComponentsCold(spark, sf).collect()
+      Queries.dedupComponentsCold(spark, sf).collect()
+      assert(cachedPlans == plans)
+      assert(persistedAfterGc(rdds) <= rdds)
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("a failing CTAS chain still awaits the concurrent customers CTAS " +
+    "before its exception propagates") {
+    val sideDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      ops.Funnel.alongside { Thread.sleep(300); sideDone.set(true) } {
+        throw new IllegalStateException("chain failed")
+      }
+    }
+    assert(e.getMessage == "chain failed")
+    assert(sideDone.get, "the concurrent CTAS was still running")
   }
 
   test("typed sessionization equals the window-based plan") {
