@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one UNTIMED full-catalog warm-up pass, then every
   * declared query N times (default 3) reporting the per-query MEDIAN —
@@ -24,26 +23,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // The generated-code compile cache defaults to 100 entries — sized
-      // for a handful of hot queries, not a 367-query catalog. Under the
-      // default, every measured run re-Janino-compiles most stages (the
-      // warmup pass's compilations are long evicted by the time the
-      // clock starts), which both inflates and DESTABILIZES medians
-      // (round-10 baseline: queries swung 0.5 s ↔ 2.6 s run-over-run
-      // with no code change, tracking cache-pressure shifts as the
-      // catalog grew). Any real multi-query service sizes this cache to
-      // its workload; catalog-sized here, independent of core count.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // fixed (sorted) execution order: hash-map order shifts whenever a

@@ -56,14 +56,10 @@ object ClusterFaultProbe {
     val outJson = args.headOption.getOrElse("CLUSTER_FAULT_r10.json")
     require(sys.env.contains("SPARK_HOME"), "needs SPARK_HOME (see ClusterVerify)")
     val master = "local-cluster[2,4,4096]"
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "64")
+    val spark = GraftSession.builder(master, 64)
       .config("spark.executor.memory", "3g")
       .config("spark.executor.extraClassPath",
         "/root/repo/target/scala-2.13/classes")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

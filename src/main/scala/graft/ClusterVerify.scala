@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-JVM correctness gate (round 10, VERDICT r9 "next" #1): runs the
   * SAME dumps as [[Verify]] but on `local-cluster[2,4,4096]` — a real
   * standalone master + 2 workers, each executor a SEPARATE forked JVM.
@@ -51,17 +49,11 @@ object ClusterVerify {
     // executors are fresh JVMs: they get Spark from SPARK_HOME/jars and
     // need ONLY the graft classes appended (same machine, plain dir)
     val graftClasses = "/root/repo/target/scala-2.13/classes"
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "8") // 2 workers × 4 cores
+    val spark = GraftSession.builder(master, 8) // 2 workers × 4 cores
       .config("spark.executor.memory", "3g") // worker offers 4096 MiB
       .config("spark.executor.extraClassPath", graftClasses)
       .config("spark.executor.extraJavaOptions",
         jdk17AddOpens + " -XX:ReservedCodeCacheSize=512m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     Verify.run(spark, sfDir, outDir, only)
     // topology recorded AFTER the run (registration is async at startup)

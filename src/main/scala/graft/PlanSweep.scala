@@ -228,18 +228,4 @@ object PlanSweep {
           Some(name -> s"PLAN_ERROR ${e.getMessage.take(80)}")
       }
     }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    sweep(spark, "/root/testdata/sf0.001").foreach { case (n, b) =>
-      println(s"$n: $b")
-    }
-    println("SWEEP_DONE")
-    spark.stop()
-  }
 }

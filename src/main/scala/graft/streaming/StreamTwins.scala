@@ -119,7 +119,8 @@ object StreamTwins {
     * they arrive). For those shapes the trailing empty batch re-plans the
     * query, reloads and re-commits every state store, and emits nothing —
     * measured 1.0-1.4 s of the stream-stream inner join's 3.3 s at sf0.1
-    * (StreamProbe: batch 1, rows=0, addBatch ≈ 950 ms). Queries whose
+    * (`Cli profile` per-batch durations: batch 1, rows=0, addBatch
+    * ≈ 950 ms). Queries whose
     * emission is WATERMARK-driven (outer joins, append-mode window aggs,
     * event-time timeouts) must stay on [[streamSession]] — their no-data
     * batch is what flushes expired state. */

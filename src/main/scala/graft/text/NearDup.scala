@@ -554,20 +554,6 @@ object NearDup {
           blockKey(b, blockVal(b).bitwiseXOR(lit(1L << bit))))
       }: _*)).as("k"))
 
-  /** Diagnostics seams for `tools.Probe` (not part of the query surface). */
-  private[graft] def exactKeyedDiag(sim: DataFrame): DataFrame = exactKeyed(sim)
-  private[graft] def simhashCandDiag(sim: DataFrame, maxHamming: Int,
-                                     maxBucket: Int): Long = {
-    val radius = hammingRadius(maxHamming)
-    val exact = exactKeyed(sim)
-    val ok = exact.groupBy("k").count()
-      .filter(col("count") <= maxBucket).drop("count")
-    ballKeyed(sim, radius).join(ok, "k").as("a")
-      .join(exact.join(ok, "k").as("b"),
-        col("a.k") === col("b.k") && col("a.id") < col("b.id"))
-      .count()
-  }
-
   private def simhashPairsFromSim(sim: DataFrame, maxHamming: Int,
                                   maxBucket: Int): DataFrame = {
     val radius = hammingRadius(maxHamming)
@@ -697,12 +683,6 @@ object NearDup {
     sim.unpersist()
     pairs
   }
-
-  private[graft] def simhashVerifiedFromShinglesDiag(docs: DataFrame,
-      sh: DataFrame, idCol: String, textCol: String, threshold: Double,
-      maxHamming: Int, maxBucket: Int): DataFrame =
-    simhashVerifiedFromShingles(docs, sh, idCol, textCol, threshold,
-      maxHamming, maxBucket)
 
   /** The verified tier uses a TIGHTER spam-bucket cap (200) than the raw
     * candidate tier: on a templated short-document corpus the simhash

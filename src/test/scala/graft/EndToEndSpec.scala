@@ -11,6 +11,25 @@ class EndToEndSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  private def cachedPlans: Int = {
+    val cm = spark.sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[scala.collection.Seq[_]].size
+  }
+
+  // checkpointed blocks are weakly held: they leave the inventory once
+  // their frame is collected, which a cache() entry never does
+  private def persistedAfterGc(atMost: Int): Int = {
+    var n = 0
+    var tries = 0
+    do {
+      System.gc(); Thread.sleep(100)
+      n = spark.sparkContext.getPersistentRDDs.size; tries += 1
+    } while (n > atMost && tries < 20)
+    n
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -93,24 +112,6 @@ class EndToEndSpec extends AnyFunSuite {
   test("dedup_components_cold leaves no cache entry or persisted RDD " +
     "behind across calls on the distributed path") {
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    val sc = spark.sparkContext
-    def cachedPlans: Int = {
-      val cm = spark.sharedState.cacheManager
-      val f = cm.getClass.getDeclaredField("cachedData")
-      f.setAccessible(true)
-      f.get(cm).asInstanceOf[scala.collection.Seq[_]].size
-    }
-    // checkpointed blocks are weakly held: they leave the inventory once
-    // their frame is collected, which a cache() entry never does
-    def persistedAfterGc(atMost: Int): Int = {
-      var n = 0
-      var tries = 0
-      do {
-        System.gc(); Thread.sleep(100)
-        n = sc.getPersistentRDDs.size; tries += 1
-      } while (n > atMost && tries < 20)
-      n
-    }
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
@@ -122,6 +123,16 @@ class EndToEndSpec extends AnyFunSuite {
       assert(cachedPlans == plans)
       assert(persistedAfterGc(rdds) <= rdds)
     } finally spark.conf.set(key, prev)
+  }
+
+  test("mm_phash_dedup leaves no cache entry or persisted RDD behind " +
+    "across calls") {
+    val plans = cachedPlans
+    val rdds = persistedAfterGc(Int.MaxValue)
+    Queries.mmPhashDedup(spark, sf).collect()
+    Queries.mmPhashDedup(spark, sf).collect()
+    assert(cachedPlans == plans)
+    assert(persistedAfterGc(rdds) <= rdds)
   }
 
   test("a failing CTAS chain still awaits the concurrent customers CTAS " +

@@ -45,6 +45,30 @@ class EtlOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("sink_backfill seeds its base on first use in a JVM even when a " +
+    "seeded sentinel from another run sits over an empty base dir") {
+    // private copies of the events table: each copy's data tag differs
+    // from every other caller's, so neither output dir was seeded here
+    def lakeCopy(): String = {
+      val d = java.nio.file.Paths.get(
+        ops.TempFiles.dir(s"backfill_lake/${System.nanoTime()}"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "events.parquet"),
+        d.resolve("events.parquet"))
+      d.toString
+    }
+    val (stale, fresh) = (lakeCopy(), lakeCopy())
+    val outs = Seq(stale, fresh).map(l =>
+      ops.TempFiles.dir(s"backfill_${ops.TempFiles.tag(l)}"))
+    try {
+      java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(outs.head, "_base_seeded"))
+      val got = Queries.sinkBackfill(spark, stale).collect().toSeq
+      assert(got == Queries.sinkBackfill(spark, fresh).collect().toSeq)
+      assert(got.size > 3, "every day must be present, not only the restated ones")
+    } finally (outs ++ Seq(stale, fresh)).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
+
   test("attribution credit conserves mass: each journey pays out " +
     "~1e6 micro-credits and first/last counts equal the purchase count") {
     val ev = ops.Tables.table(spark, sf, "events")

@@ -73,7 +73,7 @@ class FaultInjectionSpec extends AnyFunSuite {
   * streamSnapshotCommit), with a one-shot injected task failure when
   * armed, then dumps the committed rows sorted plus a status line. */
 object FaultInjectionHelper {
-  import org.apache.spark.sql.{SparkSession, functions => F}
+  import org.apache.spark.sql.{functions => F}
   import org.apache.spark.sql.types._
 
   // one-shot per-JVM fault + attempt telemetry (the injection must be
@@ -87,12 +87,8 @@ object FaultInjectionHelper {
     armed.set(faulted)
     val out = Paths.get(outDir)
     Files.createDirectories(out)
-    val spark = SparkSession.builder()
-      .master("local[4, 2]") // 2 = spark.task.maxFailures: retries ON
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 2 = spark.task.maxFailures: retries ON
+    val spark = GraftSession.builder("local[4, 2]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
