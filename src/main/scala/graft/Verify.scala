@@ -42,11 +42,17 @@ object Verify {
   }
 
   /** Dump `only` (or every) declared query to `outDir` on the given
-    * session — the one body [[main]] (single-JVM local) and
-    * [[ClusterVerify]] (multi-JVM local-cluster) share, so the cluster
-    * gate exercises exactly the driver gate's code path. */
+    * session; a name in `only` that is not declared fails the call with
+    * `IllegalArgumentException` before anything runs. The one body
+    * [[main]] (single-JVM local) and [[ClusterVerify]] (multi-JVM
+    * local-cluster) share, so the cluster gate exercises exactly the
+    * driver gate's code path. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
           only: Option[Set[String]]): Unit = {
+    // a mistyped name must not read as a pass: reject before any dump
+    val unknown = only.toSeq.flatten.filterNot(SparkEntry.queries.contains).sorted
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown queries: ${unknown.mkString(", ")}")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val todo = SparkEntry.queries.toSeq

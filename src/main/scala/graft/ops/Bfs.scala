@@ -11,10 +11,12 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: a pair graph that fits one broadcast (at most
   * `spark.sql.autoBroadcastJoinThreshold` / 16 pairs, see [[LocalGraph]])
   * walks its frontiers over arrays on the driver and returns a local
-  * frame. Above the threshold, or with the threshold at -1, the walk is
-  * Pregel-shaped: each round is ONE edge equi-join of the CURRENT
-  * FRONTIER (not the full vertex set) + one anti-join against settled
-  * vertices + distinct — all frontier-sized, never corpus-sized — and
+  * frame, planned as one partition ([[graft.plans.DriverScanExec]]): an
+  * ORDER BY over it runs as one task with no exchange. Above the
+  * threshold, or with the threshold at -1, the walk is Pregel-shaped:
+  * each round is ONE edge equi-join of the CURRENT FRONTIER (not the full
+  * vertex set) + one anti-join against settled vertices + distinct —
+  * all frontier-sized, never corpus-sized — and
   * `localCheckpoint` truncates the growing lineage each round (the
   * [[Components]] discipline; on a cluster, `checkpoint()` to the
   * cluster FS). Both paths stop early when a frontier empties.

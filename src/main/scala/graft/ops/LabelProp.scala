@@ -30,10 +30,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: a pair graph that fits one broadcast (at most
   * `spark.sql.autoBroadcastJoinThreshold` / 16 pairs, see [[LocalGraph]])
   * runs the same R rounds over arrays on the driver and returns a local
-  * frame. Above the threshold, or with the threshold at -1, each round is
-  * one equi-join of the edge list against the vertex-sized label table
-  * plus one (vertex, label)-keyed count and one per-vertex argmax — Spark
-  * 4 plans the row_number(1) as WindowGroupLimit, capping per-partition
+  * frame, planned as one partition ([[graft.plans.DriverScanExec]]), so
+  * a window or ORDER BY over it needs no exchange. Above the threshold,
+  * or with the threshold at -1, each round is one equi-join of the edge
+  * list against the vertex-sized label table plus one (vertex,
+  * label)-keyed count and one per-vertex argmax — Spark 4 plans the
+  * row_number(1) as WindowGroupLimit, capping per-partition
   * before the exchange. State between rounds is one narrow (node, lab)
   * row per vertex of the PAIR graph (duplicates only, far smaller than
   * the corpus); `localCheckpoint` truncates the iterative lineage exactly

@@ -21,6 +21,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * labels); the distributed loops remain the path above the threshold
   * and the reference the local rounds are tested against.
   *
+  * A result comes back from [[LocalGraph#frame]] as a `LocalRelation`.
+  * Under the same threshold [[graft.plans.DriverScanStrategy]] plans it
+  * as one partition, so the sort, window or aggregate a query puts on top
+  * runs as one task with no exchange. (A result frame is 24 bytes a
+  * vertex, so a graph near the pair limit with mostly distinct vertices
+  * can exceed the threshold and scan as Spark's `LocalTableScan`; the
+  * lake's graphs are far below it.)
+  *
   * `ids` holds the distinct vertex ids in ascending order; `adj(v)` the
   * dense indices of v's neighbours. Every pair contributes both
   * directions, so a duplicated pair or a self-loop keeps the multiplicity
@@ -31,7 +39,8 @@ private[ops] final class LocalGraph private (val ids: Array[Long],
   def size: Int = ids.length
 
   /** A two-column local frame (id first) over the vertices `keep` admits,
-    * in ascending id order. */
+    * in ascending id order; planned as one partition when it fits the
+    * broadcast threshold. */
   def frame(spark: SparkSession, idCol: String, valueCol: String,
             values: Array[Long], keep: Int => Boolean = _ => true): DataFrame = {
     val rows = new java.util.ArrayList[Row](size)

@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
@@ -230,6 +231,14 @@ object NearDup {
           .localCheckpoint(true)
       })
 
+  /** Release one cache entry. A `localCheckpoint` pair table is a
+    * `LogicalRDD` leaf whose blocks belong to the checkpointed RDD, which
+    * `Dataset.unpersist` does not touch: unpersist that RDD instead. */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(); ()
+    case _ => df.unpersist(); ()
+  }
+
   /** Unpersist and drop every cached pair table of this session. Evicts
     * the matching buildLocks keys too (round-9, ADVICE r8 #3: lock
     * objects otherwise accumulate across data epochs forever — a lock is
@@ -237,7 +246,7 @@ object NearDup {
   def clearCaches(spark: SparkSession): Unit = {
     val c = pairCaches.remove(spark)
     if (c != null) {
-      c.values.foreach(_.unpersist())
+      c.values.foreach(release)
       c.keys.foreach(buildLocks.remove)
     }
   }
@@ -253,7 +262,7 @@ object NearDup {
     if (c != null) {
       val doomed = c.keys.filter(_.split("\\|").lift(1).contains(key)).toSeq
       doomed.foreach { k =>
-        c.remove(k).foreach(_.unpersist())
+        c.remove(k).foreach(release)
         buildLocks.remove(k)
       }
     }
@@ -262,7 +271,7 @@ object NearDup {
   /** Unpersist and drop all cached pair tables across sessions. */
   def clearCaches(): Unit = pairCaches.synchronized {
     val it = pairCaches.values.iterator()
-    while (it.hasNext) { it.next().values.foreach(_.unpersist()); it.remove() }
+    while (it.hasNext) { it.next().values.foreach(release); it.remove() }
     buildLocks.clear()
   }
 

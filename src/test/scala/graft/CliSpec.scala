@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `tools.Cli` subcommands on the shared test session: they print what
   * they promise, reject unknown names before running anything, and never
-  * stop a session they did not build. */
+  * stop a session they did not build. `Verify.run` rejects unknown names
+  * the same way. */
 class CliSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
@@ -52,5 +53,16 @@ class CliSpec extends AnyFunSuite {
     assert(buf.size == 0, s"$q ran before the unknown name was rejected")
     assert(intercept[IllegalArgumentException](tools.Cli.oracle("no_such_query"))
       .getMessage.contains("no_such_query"))
+  }
+
+  test("Verify.run fails on every unknown name before any query is dumped") {
+    val dir = java.nio.file.Paths.get(ops.TempFiles.dir("verify_unknown"))
+    // a dump left behind by an earlier run must not read as this run's
+    org.apache.commons.io.FileUtils.cleanDirectory(dir.toFile)
+    val e = intercept[IllegalArgumentException](
+      Verify.run(spark, sf, dir.toString, Some(Set(q, "no_such_a", "no_such_b"))))
+    assert(e.getMessage.contains("no_such_a") && e.getMessage.contains("no_such_b"))
+    assert(!e.getMessage.contains(q), e.getMessage)
+    assert(!java.nio.file.Files.exists(dir.resolve(q)), s"$q was dumped")
   }
 }

@@ -72,4 +72,21 @@ class ContainmentSpec extends AnyFunSuite {
     val docs = Seq((1L, "only two"), (2L, "a b c d e f g"), (3L, "x"))
     assert(viaIndex(docs, 0.8, "tiny-docs").isEmpty)
   }
+
+  test("clearCachesFor releases the checkpointed pair tables' blocks") {
+    val key = "release-fixture"
+    val docs = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h i"),
+      (3L, "a b c d")).toDF("doc_id", "text")
+    val tables = Seq(
+      NearDup.containmentPairs(docs, "doc_id", "text", 0.8, cacheKey = key),
+      NearDup.minhashDupPairsCached(docs, "doc_id", "text", 0.5, key))
+    assert(tables.forall(_.count() > 0), "fixture has no pairs")
+    val rdds = tables.map(_.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd)
+    val persisted = spark.sparkContext.getPersistentRDDs
+    assert(rdds.forall(r => persisted.contains(r.id)))
+    NearDup.clearCachesFor(spark, key)
+    val left = spark.sparkContext.getPersistentRDDs
+    assert(rdds.forall(r => !left.contains(r.id)), "a checkpointed pair table is still persisted")
+  }
 }

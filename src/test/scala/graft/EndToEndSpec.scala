@@ -125,6 +125,27 @@ class EndToEndSpec extends AnyFunSuite {
     } finally spark.conf.set(key, prev)
   }
 
+  test("the small-graph queries plan no exchange at the default threshold " +
+    "and keep the distributed loops' exchanges at -1, with the same rows") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    Seq("graph_bfs", "dedup_components_cold", "graph_label_propagation").foreach { q =>
+      val local = SparkEntry.queries(q)(spark, sf)
+      val localPlan = local.queryExecution.executedPlan.toString
+      assert(localPlan.contains("DriverScan [") && !localPlan.contains("Exchange"),
+        s"$q:\n$localPlan")
+      val prev = spark.conf.get(key)
+      val (distributedPlan, distributedRows) =
+        try {
+          spark.conf.set(key, "-1")
+          val d = SparkEntry.queries(q)(spark, sf)
+          (d.queryExecution.executedPlan.toString, d.collect().toSeq)
+        } finally spark.conf.set(key, prev)
+      assert(distributedPlan.contains("Exchange") && !distributedPlan.contains("DriverScan"),
+        s"$q at -1:\n$distributedPlan")
+      assert(local.collect().toSeq == distributedRows, s"$q rows differ")
+    }
+  }
+
   test("mm_phash_dedup leaves no cache entry or persisted RDD behind " +
     "across calls") {
     val plans = cachedPlans
