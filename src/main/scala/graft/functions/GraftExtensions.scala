@@ -12,11 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * paths consume [[GraftFunctions.builders]], so a kernel parameter can
   * never differ between them. Also injects the
   * [[SimilarityFilterPruning]] optimizer rule (length-filter pre-pruning
-  * for Jaccard predicates), the [[graft.plans.AsOfJoinStrategy]]
-  * planner strategy (native as-of join) and the
-  * [[graft.plans.DriverScanStrategy]] planner strategy (a small driver-held
-  * relation scans as one partition, so sorts, windows and aggregates over
-  * it need no exchange). */
+  * for Jaccard predicates) and the [[graft.plans.AsOfJoinStrategy]]
+  * planner strategy (native as-of join). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
@@ -28,6 +25,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => SimilarityFilterPruning)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.DriverScanStrategy)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: a pair graph that fits one broadcast (at most
   * `spark.sql.autoBroadcastJoinThreshold` / 16 pairs, see [[LocalGraph]])
   * walks its frontiers over arrays on the driver and returns a local
-  * frame, planned as one partition ([[graft.plans.DriverScanExec]]): an
+  * frame, planned as one partition (see [[LocalGraph]]): an
   * ORDER BY over it runs as one task with no exchange. Above the
   * threshold, or with the threshold at -1, the walk is Pregel-shaped:
   * each round is ONE edge equi-join of the CURRENT FRONTIER (not the full

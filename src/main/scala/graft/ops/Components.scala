@@ -33,7 +33,7 @@ import scala.collection.concurrent.TrieMap
   * runs the same rounds over arrays on the driver — one bounded collect
   * instead of a join, an aggregate and a driver job per round — and
   * returns a local frame, planned as one partition
-  * ([[graft.plans.DriverScanExec]]), so the window and ORDER BY callers
+  * (see [[LocalGraph]]), so the window and ORDER BY callers
   * put on it run as one task with no exchange. Above the threshold, or
   * with the threshold at -1, the distributed loop runs: at 100 TB each
   * round's label table is

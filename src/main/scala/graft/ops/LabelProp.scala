@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: a pair graph that fits one broadcast (at most
   * `spark.sql.autoBroadcastJoinThreshold` / 16 pairs, see [[LocalGraph]])
   * runs the same R rounds over arrays on the driver and returns a local
-  * frame, planned as one partition ([[graft.plans.DriverScanExec]]), so
+  * frame, planned as one partition (see [[LocalGraph]]), so
   * a window or ORDER BY over it needs no exchange. Above the threshold,
   * or with the threshold at -1, each round is one equi-join of the edge
   * list against the vertex-sized label table plus one (vertex,

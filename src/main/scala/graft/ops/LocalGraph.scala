@@ -21,13 +21,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * labels); the distributed loops remain the path above the threshold
   * and the reference the local rounds are tested against.
   *
-  * A result comes back from [[LocalGraph#frame]] as a `LocalRelation`.
-  * Under the same threshold [[graft.plans.DriverScanStrategy]] plans it
-  * as one partition, so the sort, window or aggregate a query puts on top
-  * runs as one task with no exchange. (A result frame is 24 bytes a
-  * vertex, so a graph near the pair limit with mostly distinct vertices
-  * can exceed the threshold and scan as Spark's `LocalTableScan`; the
-  * lake's graphs are far below it.)
+  * A result comes back from [[LocalGraph#frame]] coalesced to one
+  * partition, which the planner reads as `SinglePartition`: the sort,
+  * window or aggregate a query puts on top runs as one task with no
+  * exchange, for rows the driver already holds.
   *
   * `ids` holds the distinct vertex ids in ascending order; `adj(v)` the
   * dense indices of v's neighbours. Every pair contributes both
@@ -39,14 +36,13 @@ private[ops] final class LocalGraph private (val ids: Array[Long],
   def size: Int = ids.length
 
   /** A two-column local frame (id first) over the vertices `keep` admits,
-    * in ascending id order; planned as one partition when it fits the
-    * broadcast threshold. */
+    * in ascending id order, as one partition. */
   def frame(spark: SparkSession, idCol: String, valueCol: String,
             values: Array[Long], keep: Int => Boolean = _ => true): DataFrame = {
     val rows = new java.util.ArrayList[Row](size)
     for (v <- 0 until size if keep(v)) rows.add(Row(ids(v), values(v)))
     spark.createDataFrame(rows, StructType(Seq(
-      StructField(idCol, LongType), StructField(valueCol, LongType))))
+      StructField(idCol, LongType), StructField(valueCol, LongType)))).coalesce(1)
   }
 }
 

@@ -131,8 +131,8 @@ class EndToEndSpec extends AnyFunSuite {
     Seq("graph_bfs", "dedup_components_cold", "graph_label_propagation").foreach { q =>
       val local = SparkEntry.queries(q)(spark, sf)
       val localPlan = local.queryExecution.executedPlan.toString
-      assert(localPlan.contains("DriverScan [") && !localPlan.contains("Exchange"),
-        s"$q:\n$localPlan")
+      assert(localPlan.contains("Coalesce 1") && localPlan.contains("LocalTableScan") &&
+        !localPlan.contains("Exchange"), s"$q:\n$localPlan")
       val prev = spark.conf.get(key)
       val (distributedPlan, distributedRows) =
         try {
@@ -140,7 +140,7 @@ class EndToEndSpec extends AnyFunSuite {
           val d = SparkEntry.queries(q)(spark, sf)
           (d.queryExecution.executedPlan.toString, d.collect().toSeq)
         } finally spark.conf.set(key, prev)
-      assert(distributedPlan.contains("Exchange") && !distributedPlan.contains("DriverScan"),
+      assert(distributedPlan.contains("Exchange") && !distributedPlan.contains("LocalTableScan"),
         s"$q at -1:\n$distributedPlan")
       assert(local.collect().toSeq == distributedRows, s"$q rows differ")
     }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,8 +24,12 @@ class LocalGraphSpec extends AnyFunSuite {
     finally spark.conf.set(thresholdKey, prev)
   }
 
-  private def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.logical.isInstanceOf[LocalRelation]
+  /** A driver-side result: the rows on the driver, coalesced to one
+    * partition. */
+  private def isLocal(df: DataFrame): Boolean = df.queryExecution.logical match {
+    case Repartition(1, false, _: LocalRelation) => true
+    case _ => false
+  }
 
   private val operators: Seq[(String, DataFrame => DataFrame)] = Seq(
     "components" -> (p => Components.connectedComponents(p, "a", "b")),
